@@ -65,8 +65,8 @@ object Blocking {
     * every frame in `consumers` has appeared in an executed plan (success or
     * failure).
     *
-    * Why: the salted-join entries feed three consumers inside a single
-    * materialization (block sizes + both join sides) — that is what the
+    * Why: a cross join's entries feed two consumers inside a single
+    * materialization (block sizes + replication) — that is what the
     * cache deduplicates. But a plain .persist() pins the entry in the
     * session CacheManager FOREVER; repeated dedup-operator calls in a
     * long-lived session accumulate pinned block storage until eviction
@@ -99,7 +99,7 @@ object Blocking {
         if (remaining.nonEmpty && misses >= maxMisses) {
           // correct but observable: the consumer will recompute uncached
           abandonedReleases.incrementAndGet()
-          log.warn(s"salted-join entry cache force-released after $misses unrelated " +
+          log.warn(s"cross-join entry cache force-released after $misses unrelated " +
             s"executions with ${remaining.size} consumer(s) never run — a late " +
             "execution recomputes without the cache's dedup benefit")
         }
@@ -163,54 +163,53 @@ object Blocking {
     projected.select(col("id") +: explode(keys).as("block_key") +: day: _*)
   }
 
-  /** Generic salted block-local self-join — THE skew defuser, shared by ER
-    * blocking and every standalone dedup operator (Dedup.minhash/simhash/
-    * ngram/embedding; VERDICT r1 asked for exactly this generalization).
+  /** Generic block-local self-join pair generator — THE skew defuser, shared
+    * by ER blocking and every standalone dedup operator (Dedup.minhash/
+    * simhash/ngram/embedding).
     *
     * Input: `entries` with columns (`block_key`: any equi-joinable type,
-    * `id`: long) plus optional `payload` columns carried to both sides of
-    * each pair (as `<p>_1`/`<p>_2`). Output pairs are canonical (id1 < id2,
-    * payloads following their row).
+    * `id`: any orderable type) plus optional `payload` columns carried to
+    * both sides of each pair (as `<p>_1`/`<p>_2`). Output pairs are
+    * canonical (id1 < id2, payloads following their row); each block emits
+    * each of its pairs exactly once.
     *
-    * Oversized-block handling (two-role salt grid, full pair coverage): a
-    * block of n rows gets k = ceil(n/cap) salts; CROSS-salt pairs join
-    * through per-pair buckets (x, y), x < y — a row with salt s enters
+    * Aggregate-then-generate: the entries shuffle ONCE, as raw rows, by
+    * `block_key` (session shuffle partitions), sorted by it within each
+    * partition. A streaming per-key aggregate
+    * ([[GraftFunctions.block_members]]) returns each block's size n and,
+    * while n ≤ cap, its member rows — past cap it drops them, so no task
+    * buffers more than cap rows of one key — and the codegen generator
+    * [[GraftFunctions.block_pairs]] turns a small block's members into its
+    * pairs. No join and no hash build for the (overwhelmingly common) small
+    * blocks.
+    *
+    * Blocks with n > cap (k = ceil(n/cap) salts, salt = hash(id) mod k) read
+    * the same exchange a second time (a ReusedExchange: their counting pass
+    * references every entry column, so column pruning cannot narrow it
+    * into a separate shuffle; the hot sizes, one row per hot block, shuffle
+    * once and are shared) and take the two-role salt grid: CROSS-salt pairs
+    * join through per-pair buckets (x, y), x < y — a row with salt s enters
     * bucket (x, y) in the LEFT role iff s == x and in the RIGHT role iff
     * s == y, so rows replicate k−1 times and every cross-salt pair meets in
-    * EXACTLY one bucket with no duplicate emissions. SAME-salt pairs come
-    * from a direct self-join within the (block_key, salt) group (~cap rows
-    * by construction — no replication needed). This bounds the rows any
-    * single join task co-joins to ~2·cap with 100% pair coverage and ZERO
-    * surplus join output — the earlier triangle construction re-emitted
-    * every same-salt pair in all k buckets (filtered post-join), i.e. up to
-    * 2× the true pair work on a dense block at web scale. Blocks above
-    * maxBlock (when maxBlock > 0) are dropped and surfaced via
+    * EXACTLY one bucket. SAME-salt pairs come from the same generator over
+    * each (block_key, salt) group (~cap rows by construction), which the
+    * right role carries as its (s, s) cell, so one numbered exchange serves
+    * both. Grid tasks co-join ~2·cap rows; coverage stays 100%. When no
+    * block exceeds cap, the hot stages run empty once and adaptive execution
+    * prunes the grid from the final plan.
+    *
+    * Blocks above maxBlock (when maxBlock > 0) are dropped and surfaced via
     * [[blockStats]], never silently; maxBlock = 0 disables dropping (exact
-    * operators).
+    * operators). Null block keys never pair.
     *
-    * Block sizes come from a partial-aggregating groupBy joined back (NOT a
-    * count-over-window: a window routes every row of a hot key through one
-    * buffering task, while the sort-merge join streams and is AQE
-    * skew-splittable).
-    *
-    * Output is NOT deduped across block keys — callers with multi-key rows
-    * (LSH bands) follow with dropDuplicates(id1, id2).
+    * Output is NOT deduped across block keys — callers whose rows carry
+    * several keys (LSH bands) dedup the pairs, or emit each pair only from
+    * its first shared key (Dedup's first-collision operators).
     */
   def saltedSelfJoinPairs(entries: DataFrame, cap: Int, maxBlock: Int,
                           payload: Seq[String] = Nil,
-                          persistEntries: Boolean = true,
                           gridRows: Option[Long] = None): DataFrame = {
-    // entries feed multiple consumers (block sizes + join sides); without
-    // materialization the upstream key computation (minhash bands, simhash
-    // aggregation, gram arrays) re-executes per consumer. The cache lives
-    // until the first action consuming the PAIRS frame, then auto-releases
-    // (no session-lifetime pinning; releaseAfterConsumed registered on the
-    // output below). Callers that already checkpoint their entries (the ER
-    // pipeline) opt out.
-    val e = if (persistEntries)
-      entries.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else entries
-    val sized = sizedEntries(e, cap, maxBlock, payload)
+    val (small, hot) = blockGroups(entries, cap, maxBlock, payload)
     val lid = col("l.id"); val rid = col("r.id")
     // cross-salt: canonicalize ids (role assignment is salt-order, not
     // id-order), payloads follow their row
@@ -218,7 +217,7 @@ object Blocking {
       payload.flatMap(p => Seq(
         when(lid < rid, col(s"l.$p")).otherwise(col(s"r.$p")).as(s"${p}_1"),
         when(lid < rid, col(s"r.$p")).otherwise(col(s"l.$p")).as(s"${p}_2")))
-    // SHUFFLE_HASH hint on every pair-grid join: its inputs are
+    // SHUFFLE_HASH hint on the pair-grid join: its inputs are
     // explode-replicated (and payload-carrying), so Catalyst's STATIC size
     // estimate — file size propagated through Generate, which does not model
     // the ×(k−1) fan-out — can land under autoBroadcastJoinThreshold and
@@ -233,44 +232,38 @@ object Blocking {
     // over MERGE deliberately: a MERGE hint was measured 2.3× slower on the
     // 1M-page er pipeline (257 s → 597 s; the sorts of the full entry tables
     // dominate) and its concurrent sort memory broke the 8 GiB single-JVM
-    // heap. The hash build side is per-partition-bounded by the engine's
-    // partition-sizing contract (shuffle.partitions scales with SF), and the
-    // grid itself bounds per-KEY groups at ~2·cap, so build maps stay small
-    // and uniform — the exact workload shuffled-hash join exists for.
+    // heap. The grid bounds per-KEY groups at ~2·cap, so build maps stay
+    // small and uniform — the exact workload shuffled-hash join exists for.
     //
-    // Each side is REPARTITIONED BY NUMBER on the FULL grid key before the
-    // join, for two independent reasons. (1) Skew: with subset
-    // co-partitioning allowed (requireAllClusterKeysForCoPartition=false),
-    // an un-pinned shuffle join happily reuses the upstream block_key-only
-    // exchange — which puts every salt bucket of a hot block back into ONE
-    // partition, physically undoing the grid's whole point. Partitioning on
-    // (block_key, bucket)/(block_key, salt) lands the salt split in the
-    // actual exchange. (2) Wave packing: these tasks are CPU-dense per byte
+    // Each grid input is REPARTITIONED BY NUMBER on the FULL grid key, for
+    // two independent reasons. (1) Skew: with subset co-partitioning allowed
+    // (requireAllClusterKeysForCoPartition=false), an un-pinned shuffle join
+    // or aggregate happily reuses the upstream block_key-only exchange —
+    // which puts every salt bucket of a hot block back into ONE partition,
+    // physically undoing the grid's whole point. Partitioning on
+    // (block_key, bucket) lands the salt split in the actual exchange. (2) Wave packing: these tasks are CPU-dense per byte
     // (up to ~cap² scored pairs per grid cell), so AQE's byte-based
     // coalescing badly under-partitions them — measured at 1M pages merging
     // the grid+scoring stage to 36 tasks of ~112 s (a third of the cores
     // idle behind the last wave; 2× wall at local[8]). A numbered
-    // repartition is exempt from AQE coalescing and replaces — not adds to —
-    // the exchange the join needs anyway.
+    // repartition is exempt from AQE coalescing.
     val n = gridPartitions(entries, gridRows)
-    val lRole = roleEntries(sized, left = true, payload)
+    val lRole = roleEntries(hot, left = true, payload)
       .repartition(n, col("block_key"), col("bucket"))
-    val rRole = roleEntries(sized, left = false, payload)
+    val rRole = roleEntries(hot, left = false, payload)
       .repartition(n, col("block_key"), col("bucket"))
     val cross = lRole.as("l").hint("shuffle_hash")
       .join(rRole.as("r"),
         col("l.block_key") === col("r.block_key") && col("l.bucket") === col("r.bucket"))
       .select(crossCols: _*)
-    val sameCols = lid.as("id1") +: rid.as("id2") +:
-      payload.flatMap(p => Seq(col(s"l.$p").as(s"${p}_1"), col(s"r.$p").as(s"${p}_2")))
-    val sizedP = sized.repartition(n, col("block_key"), col("salt"))
-    val same = sizedP.as("l").hint("shuffle_hash").join(sizedP.as("r"),
-        col("l.block_key") === col("r.block_key") &&
-        col("l.salt") === col("r.salt") && lid < rid)
-      .select(sameCols: _*)
-    val out = cross.unionByName(same)
-    if (persistEntries) releaseAfterConsumed(Seq(e), Seq(out))
-    out
+    // same-salt: the (s, s) cells of the right role, read from the same
+    // numbered exchange (a ReusedExchange); the cell filter applies to the
+    // generator's output, so it cannot be pushed below that exchange
+    val same = groups(rRole.sortWithinPartitions("block_key", "bucket"),
+        Seq("block_key", "bucket"), payload, Int.MaxValue)
+      .where(col("key.bucket.x") === col("key.bucket.y"))
+      .select(GraftFunctions.block_pairs(col("members")))
+    small.unionByName(cross).unionByName(same)
   }
 
   /** Measured-optimal grid rows per task: the round-6 protocol A/Bs read the
@@ -310,34 +303,58 @@ object Blocking {
       }
   }
 
-  /** Entries of multi-row blocks with their salt: (block_key, k, salt, id,
-    * payload*) — salt = hash(id) mod k, k = ceil(n/cap). */
-  private def sizedEntries(entries: DataFrame, cap: Int, maxBlock: Int,
-                           payload: Seq[String]): DataFrame = {
-    val sizes = entries.groupBy("block_key").agg(count(lit(1)).as("n"))
-      .where(col("n") > 1 && (if (maxBlock > 0) col("n") <= maxBlock else lit(true)))
-    // The size join is SHUFFLE_HASH-hinted BUILDING THE SIZES SIDE, for the
-    // same reason the grid joins are hinted (see saltedSelfJoinPairs): both
-    // sides are corpus-scale (entries ~ rows × keys; sizes ~ distinct
-    // multi-row blocks), so neither may ever be broadcast — and with
-    // in-memory lineage Catalyst's optimistic size estimates DO pick one:
-    // measured at 800k pages / local[8], the un-hinted plan broadcast the
-    // 13.6M-row entries side (a 1.34 GB driver-side single-threaded hash
-    // build; whole-job CPU utilization fell to 41% while 8 cores idled
-    // behind it — and at web scale that collect is a driver OOM outright).
-    // Hinted, sizes shuffles by block_key and each task builds only its
-    // partition's slice; entries streams through the same exchange the grid
-    // below needs anyway.
-    entries.join(sizes.hint("shuffle_hash"), "block_key")
-      .withColumn("k", ceil(col("n") / cap).cast("int"))
-      .withColumn("salt", pmod(xxhash64(col("id"), lit(SaltSeed)), col("k")).cast("int"))
-      .select(("block_key" +: "k" +: "salt" +: "id" +: payload).map(col): _*)
+  private def member(payload: Seq[String]) = struct(("id" +: payload).map(col): _*)
+
+  /** One row (key, n, members) per group of `sorted` (rows sorted by the
+    * `key` columns within each partition) with n ≥ 2 — members only while
+    * n ≤ keep ([[GraftFunctions.block_members]]). */
+  private def groups(sorted: DataFrame, key: Seq[String], payload: Seq[String],
+                     keep: Int): DataFrame = {
+    val k = if (key.size == 1) col(key.head) else struct(key.map(col): _*)
+    sorted.select(GraftFunctions.block_members(k, member(payload), keep)
+      .as(Seq("key", "n", "members")))
   }
 
-  /** One role's replicated copies for the cross-salt grid join: the LEFT
-    * role of a salt-s row covers buckets (s, y) for y > s; the RIGHT role
-    * covers (x, s) for x < s. */
-  private def roleEntries(sized: DataFrame, left: Boolean, payload: Seq[String]): DataFrame = {
+  /** The two halves of [[saltedSelfJoinPairs]] over ONE raw `block_key`
+    * exchange of the entries: the pairs of every block of 2..cap rows
+    * (within maxBlock), and the rows of every block above cap (within
+    * maxBlock) with their salt: (block_key, k, salt, id, payload*),
+    * k = ceil(n/cap). */
+  private def blockGroups(entries: DataFrame, cap: Int, maxBlock: Int,
+                          payload: Seq[String]): (DataFrame, DataFrame) = {
+    // the null filter sits below the exchange on purpose: the hot side's
+    // equi-join would otherwise infer it for its own copy only, and the
+    // readers of the exchange would stop being the same plan
+    val sorted = entries.where(col("block_key").isNotNull)
+      .select(("block_key" +: "id" +: payload).map(col): _*)
+      .repartition(col("block_key"))
+      .sortWithinPartitions("block_key")
+    val kept = if (maxBlock > 0) col("n") <= maxBlock else lit(true)
+    val small = groups(sorted, Seq("block_key"), payload, cap)
+      .where(col("n") <= cap && kept)
+      .select(GraftFunctions.block_pairs(col("members")))
+    // the hot side needs only n: keeping no members makes the grouping a
+    // plain count that still references every entry column, so it reads the
+    // same exchange (a ReusedExchange). Its output (one row per hot block)
+    // carries no partitioning the planner can see, so the join re-shuffles
+    // it by block_key — a tiny exchange both grid roles share. Hot sizes are
+    // the SHUFFLE_HASH build side (never broadcast a corpus-scale side; see
+    // saltedSelfJoinPairs)
+    val sizes = groups(sorted, Seq("block_key"), payload, 0)
+      .where(col("n") > cap && kept)
+      .select(col("key").as("block_key"), ceil(col("n") / cap).cast("int").as("k"))
+    val hot = sorted.join(sizes.hint("shuffle_hash"), "block_key")
+      .withColumn("salt", pmod(xxhash64(col("id"), lit(SaltSeed)), col("k")).cast("int"))
+      .select(("block_key" +: "k" +: "salt" +: "id" +: payload).map(col): _*)
+    (small, hot)
+  }
+
+  /** One role's replicated copies for the salt grid: the LEFT role of a
+    * salt-s row covers buckets (s, y) for y > s; the RIGHT role covers
+    * (x, s) for x < s plus the row's own same-salt cell (s, s), which has
+    * no left partner in the join and holds the (block_key, salt) group for
+    * the same-salt generator. */
+  private def roleEntries(hot: DataFrame, left: Boolean, payload: Seq[String]): DataFrame = {
     val empty = array().cast("array<struct<x:int,y:int>>")
     val buckets =
       if (left)
@@ -345,15 +362,8 @@ object Blocking {
           .otherwise(transform(sequence(col("salt") + 1, col("k") - 1),
             y => struct(col("salt").as("x"), y.as("y"))))
       else
-        when(col("salt") <= 0, empty)
-          .otherwise(transform(sequence(lit(0), col("salt") - 1),
-            x => struct(x.as("x"), col("salt").as("y"))))
-    sized
-      // k == 1 fast path: single-salt blocks (the overwhelmingly common case
-      // at sane caps) have NO cross-salt pairs — skip the bucket-array
-      // machinery entirely instead of evaluating per-row empty explodes; the
-      // same-salt direct join covers all their pairs
-      .where(col("k") > 1)
+        transform(sequence(lit(0), col("salt")), x => struct(x.as("x"), col("salt").as("y")))
+    hot
       .withColumn("bucket", explode(buckets))
       // canonical field nullability — see crossBucketsRaw.replicate: a
       // role-side mismatch would cast the join key and stack a second
@@ -363,18 +373,16 @@ object Blocking {
         ("id" +: payload).map(col)): _*)
   }
 
-  /** One row per (entry copy, co-joined task group) — exposed for the
-    * planted-hot-key bound tests: a cross-grid join task co-joins the rows
-    * of one (block_key, bucket=(x,y)) cell across both roles; a same-salt
-    * join task co-joins one (block_key, salt) group (tagged (s,s) here).
-    * Rows per group ≤ ~2·cap by construction. */
-  private[graft] def saltedBuckets(entries: DataFrame, cap: Int, maxBlock: Int,
-                                   payload: Seq[String] = Nil): DataFrame = {
-    val sized = sizedEntries(entries, cap, maxBlock, Nil)
-    roleEntries(sized, left = true, Nil)
-      .unionByName(roleEntries(sized, left = false, Nil))
-      .unionByName(sized.select(col("block_key"),
-        struct(col("salt").as("x"), col("salt").as("y")).as("bucket"), col("id")))
+  /** One row per (entry copy, co-joined task group) of the over-cap blocks
+    * — exposed for the planted-hot-key bound tests: a cross-grid join task
+    * co-joins the rows of one (block_key, bucket=(x,y)) cell across both
+    * roles; a same-salt generator group is one (block_key, salt) group
+    * (the right role's (s,s) cell). Rows per group ≤ ~2·cap by construction
+    * (blocks of ≤ cap rows are one group of at most cap rows). */
+  private[graft] def saltedBuckets(entries: DataFrame, cap: Int, maxBlock: Int): DataFrame = {
+    val (_, hot) = blockGroups(entries, cap, maxBlock, Nil)
+    roleEntries(hot, left = true, Nil)
+      .unionByName(roleEntries(hot, left = false, Nil))
       .select("block_key", "bucket", "id")
   }
 
@@ -383,7 +391,7 @@ object Blocking {
     * `block_key` become candidate pairs (id1 from left, id2 from right; no
     * `id1 < id2` canonicalization — the sides are distinct).
     *
-    * Skew handling is the 2-D analog of the triangle: a block with nL left /
+    * Skew handling is the 2-D analog of the self-join salt grid: a block with nL left /
     * nR right rows gets a kL×kR bucket grid (k = ceil(n/cap) per side); a
     * left row with salt x replicates to buckets {(x, b) : b < kR}, a right
     * row with salt y to {(a, y) : a < kL}, so every (L, R) pair co-occurs in
@@ -459,7 +467,7 @@ object Blocking {
     def replicate(e: DataFrame, kOwn: String, kOther: String,
                   bucketOf: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column) =
       // sizes side SHUFFLE_HASH-built for the same never-broadcast-a-
-      // corpus-scale-side reason as sizedEntries (both legs of the A×B grid
+      // corpus-scale-side reason as blockGroups (both legs of the A×B grid
       // replicate through this join)
       e.join(sizes.hint("shuffle_hash"), "block_key")
         .withColumn("salt", pmod(xxhash64(col("id"), lit(SaltSeed)), col(kOwn)).cast("int"))
@@ -599,7 +607,7 @@ object Blocking {
     // not guaranteed — an unpersisted gate could re-aggregate its input up
     // to 4× per batch. It is a frame this function DERIVES (not
     // caller-supplied), so the persist cannot clobber a caller's cache;
-    // released by the same consumer-scoped listener the salted-join entry
+    // released by the same consumer-scoped listener the cross-join entry
     // caches use.
     val (gate, overCapCache) =
       if (cfg.maxBlock > 0) {
@@ -631,12 +639,10 @@ object Blocking {
     * SURVEY §4.3.2: plain dropDuplicates wins). */
   def candidatePairs(blocks: DataFrame, cfg: Config = Config(),
                      gridRows: Option[Long] = None): DataFrame =
-    // the pipeline checkpoints its block table before calling (it is consumed
-    // by blockStats too) — no second materialization here. gridRows: the
-    // staged pipeline passes the blocks manifest's row counter so the grid
-    // partition floor tracks data at fixed cores (zero extra scans).
-    saltedSelfJoinPairs(blocks, cfg.cap, cfg.maxBlock, persistEntries = false,
-        gridRows = gridRows)
+    // gridRows: the staged pipeline passes the blocks manifest's row counter
+    // so the grid partition floor tracks data at fixed cores (zero extra
+    // scans).
+    saltedSelfJoinPairs(blocks, cfg.cap, cfg.maxBlock, gridRows = gridRows)
       .dropDuplicates("id1", "id2")
 
   /** Lineage metrics for the block stage: blocks built, size distribution,

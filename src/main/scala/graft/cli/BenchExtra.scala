@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val upTo = args.headOption.getOrElse("")
+    val headline = graft.Bench.headline
+    require(upTo.isEmpty || headline.contains(upTo),
+      s"unknown query '$upTo'; the headline queries are ${headline.mkString(", ")}")
     val sfDir = args.drop(1).headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -42,7 +45,6 @@ object BenchExtra {
       }
     })
 
-    val headline = graft.Bench.headline
     val toRun = if (upTo.nonEmpty) headline.take(headline.indexOf(upTo) + 1) else headline
     toRun.foreach { name =>
       curQuery = name

@@ -32,8 +32,7 @@ object PairsProbeMain {
     val cfg = graft.blocking.Blocking.Config()
     val blocks = graft.blocking.Blocking.blockTableFromProjected(pre, cfg).localCheckpoint()
     println(s"[pairsprobe] block entries=${blocks.count()}")
-    val raw = graft.blocking.Blocking.saltedSelfJoinPairs(
-      blocks, cfg.cap, cfg.maxBlock, persistEntries = false)
+    val raw = graft.blocking.Blocking.saltedSelfJoinPairs(blocks, cfg.cap, cfg.maxBlock)
     val t0 = System.nanoTime()
     val nRaw = raw.count()
     val tRaw = (System.nanoTime() - t0) / 1e9

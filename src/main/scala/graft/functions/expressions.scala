@@ -1,10 +1,16 @@
 package graft.functions
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode,
+  FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo,
+  Generator, GenericInternalRow, RowOrdering, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
 
@@ -322,6 +328,146 @@ case class SrpBucketExpr(child: Expression, nBits: Int, seed: Long) extends Unar
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
+/** block_members(key, member, cap) -> rows (key, n, members): streaming
+  * per-key grouping over input SORTED BY key within each partition (a
+  * sortWithinPartitions on it). One row per key with n ≥ 2 rows:
+  * its size n and, while n ≤ cap, its members; past cap the buffer is
+  * dropped (members = null) and only the count goes on, so a task never
+  * holds more than cap rows of a hot key. cap = 0 is a plain count that
+  * still references every member column (column pruning then cannot hand
+  * the counting reader a narrower, separately shuffled input).
+  *
+  * A key's row is emitted when the next key starts, and the last one from
+  * terminate(), which only the interpreted generate path calls — hence
+  * CodegenFallback. A key arriving out of order fails loudly: the input was
+  * not sorted, and its groups would be silently split. */
+case class BlockMembersExpr(key: Expression, member: Expression, cap: Int)
+    extends Generator with CodegenFallback {
+  override def children: Seq[Expression] = Seq(key, member)
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("key", key.dataType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("members", ArrayType(member.dataType, containsNull = false))))
+  override def checkInputDataTypes(): TypeCheckResult = member.dataType match {
+    case _: StructType if RowOrdering.isOrderable(key.dataType) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"block_members requires an orderable key and a struct member, got " +
+        s"${key.dataType.catalogString} and ${other.catalogString}")
+  }
+
+  /** Per-task grouping state (each task deserializes its own copy). */
+  private final class Group {
+    var key: Any = null
+    var n = 0L
+    var rows: mutable.ArrayBuffer[InternalRow] = null
+  }
+  @transient private lazy val group = new Group
+  @transient private lazy val keyOrdering = TypeUtils.getInterpretedOrdering(key.dataType)
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val k = key.eval(input)
+    val g = group
+    val done =
+      if (g.key != null && keyOrdering.equiv(k, g.key)) Iterator.empty
+      else {
+        if (g.key != null && keyOrdering.lt(k, g.key))
+          throw new IllegalStateException(
+            s"block_members: key $k after ${g.key} — input not sorted by key")
+        val out = flush()
+        g.key = InternalRow.copyValue(k)
+        g.n = 0L
+        g.rows = if (cap > 0) mutable.ArrayBuffer.empty[InternalRow] else null
+        out
+      }
+    g.n += 1
+    if (g.rows != null) {
+      if (g.n > cap) g.rows = null
+      else g.rows += InternalRow.copyValue(member.eval(input)).asInstanceOf[InternalRow]
+    }
+    done
+  }
+
+  override def terminate(): IterableOnce[InternalRow] = flush()
+
+  private def flush(): Iterator[InternalRow] = {
+    val g = group
+    if (g.key == null || g.n < 2) Iterator.empty
+    else Iterator.single(InternalRow(g.key, g.n,
+      if (g.rows == null) null else new GenericArrayData(g.rows.toArray[Any])))
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(key = c(0), member = c(1))
+}
+
+/** block_pairs(array<struct<id, p…>>) -> rows (id1, id2, p_1, p_2, …): every
+  * unordered pair of a block's members exactly once, canonical (id1 < id2
+  * under the id type's ordering), each payload field following its own row.
+  * Codegen'd as an iterator over the member array: no join, no hash build,
+  * and the consumer (pair filter, dedup aggregate) fuses behind it. */
+case class BlockPairsExpr(child: Expression) extends UnaryExpression with Generator {
+  private def memberType: StructType =
+    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(st: StructType, _) if st.nonEmpty &&
+        RowOrdering.isOrderable(st.head.dataType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      "block_pairs requires array<struct<id, ...>> with an orderable first field, got " +
+        other.catalogString)
+  }
+  override def elementSchema: StructType = {
+    val id = memberType.head
+    StructType(Seq(id.copy(name = "id1"), id.copy(name = "id2")) ++
+      memberType.tail.flatMap(f => Seq(f.copy(name = s"${f.name}_1"), f.copy(name = s"${f.name}_2"))))
+  }
+  @transient private lazy val fieldTypes = memberType.map(_.dataType).toArray
+  @transient private lazy val idOrdering = TypeUtils.getInterpretedOrdering(fieldTypes(0))
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val a = child.eval(input)
+    if (a == null) Iterator.empty else pairs(a.asInstanceOf[ArrayData])
+  }
+
+  /** The pair iterator over one member array (called from generated code). */
+  def pairs(a: ArrayData): Iterator[InternalRow] = {
+    val n = a.numElements()
+    if (n < 2) return Iterator.empty
+    val width = fieldTypes.length
+    val members = Array.tabulate(n) { i =>
+      val r = a.getStruct(i, width)
+      Array.tabulate[Any](width)(f => r.get(f, fieldTypes(f)))
+    }
+    new Iterator[InternalRow] {
+      private var i = 0
+      private var j = 1
+      override def hasNext: Boolean = i < n - 1
+      override def next(): InternalRow = {
+        val (lo, hi) =
+          if (idOrdering.lt(members(i)(0), members(j)(0))) (members(i), members(j))
+          else (members(j), members(i))
+        val out = new Array[Any](2 * width)
+        var f = 0
+        while (f < width) { out(2 * f) = lo(f); out(2 * f + 1) = hi(f); f += 1 }
+        j += 1
+        if (j == n) { i += 1; j = i + 1 }
+        new GenericInternalRow(out)
+      }
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val arr = child.genCode(ctx)
+    val self = ctx.addReferenceObj("blockPairs", this)
+    ev.copy(code = code"""
+      |${arr.code}
+      |scala.collection.Iterator<InternalRow> ${ev.value} = ${arr.isNull}
+      |  ? scala.collection.Iterator$$.MODULE$$.empty() : $self.pairs(${arr.value});
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 /** Column-level API + SQL registration. */
 object GraftFunctions {
   import org.apache.spark.sql.functions._
@@ -345,6 +491,9 @@ object GraftFunctions {
   def srp_bucket(c: Column, nBits: Int, seed: Long): Column = col(SrpBucketExpr(ex(c), nBits, seed))
   def avg_pool_embed(c: Column, dim: Int): Column = col(AvgPoolExpr(ex(c), dim))
   def multi_avg_pool_embed(c: Column, dim: Int): Column = col(MultiAvgPoolExpr(ex(c), dim))
+  def block_members(key: Column, member: Column, cap: Int): Column =
+    col(BlockMembersExpr(ex(key), ex(member), cap))
+  def block_pairs(members: Column): Column = col(BlockPairsExpr(ex(members)))
 
   /** Numeric similarity family, exactly the reference's formulas
     * (Deeper.py:327-343) — pure Column expressions, fully codegen'd. */

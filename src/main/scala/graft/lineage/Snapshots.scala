@@ -1,6 +1,6 @@
 package graft.lineage
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,21 +34,24 @@ object Snapshots {
       .map { case (p, n) => s"""{"partition":$p,"rows":$n}""" }.mkString("[", ",", "]")
     val json = (head :+ s""""counters":$ctr""" :+ s""""partitions":$parts""")
       .mkString("{", ",", "}")
-    Files.createDirectories(Paths.get(path).getParent)
+    val target = Paths.get(path)
+    Files.createDirectories(target.getParent)
     // write-temp + atomic rename: a reader (or a concurrent resume doing a
     // read-modify-write through appendCounters) never observes a torn
-    // manifest (round-6 ADVICE)
-    val tmp = Paths.get(path + ".tmp")
-    Files.writeString(tmp, json,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    try Files.move(tmp, Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, Paths.get(path),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    // manifest. The temp file is unique per write, so two concurrent
+    // writers of one manifest never clobber each other's temp content or
+    // rename it away from under each other; the last rename wins.
+    val tmp = Files.createTempFile(target.getParent, target.getFileName.toString + ".", ".tmp")
+    try {
+      Files.writeString(tmp, json)
+      try Files.move(tmp, target,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      catch {
+        case _: java.nio.file.AtomicMoveNotSupportedException =>
+          Files.move(tmp, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Minimal field extraction (manifests are machine-written; values are

@@ -10,19 +10,25 @@ import graft.functions.GraftFunctions
   * All are DataFrame-native (shuffle on content keys, no driver loops):
   *
   *  - exact:       hash-groupBy on text (one shuffle)
-  *  - MinHash-LSH: shingle→minhash→band→salted bucket-join→exact verify
+  *  - MinHash-LSH: shingle→minhash→band→block pairs→exact verify
   *  - SimHash:     fingerprint banded into hamming-safe chunks (pigeonhole-
-  *                 exact for maxHamming ≤ chunks-1), salted bucket join
+  *                 exact for maxHamming ≤ chunks-1), block pairs per band
   *  - n-gram Jaccard: token-set overlap verification within blocks
   *  - embedding cosine: SRP-LSH bucketed near-duplicate vectors
   *
   * Every pair-generating operator routes through
-  * [[Blocking.saltedSelfJoinPairs]]: a hot band/chunk/block key is triangle-
-  * salted into ceil(n/cap) buckets, so no single join task ever co-joins more
-  * than ~2·cap rows — the quadratic-hot-bucket failure mode at 10^9 docs is
-  * bounded by construction, with zero recall loss. Oversized blocks can
-  * additionally be dropped (maxBlock > 0, counted via [[Blocking.blockStats]],
-  * never silent); the exact-result operators default to maxBlock = 0.
+  * [[Blocking.saltedSelfJoinPairs]]: blocks of up to cap rows are aggregated
+  * and expanded into their pairs by a generator, and a hot band/chunk/block
+  * key is salted into ceil(n/cap) groups joined through a bucket grid, so no
+  * single task ever holds more than ~2·cap rows of one key — the
+  * quadratic-hot-bucket failure mode at 10^9 docs is bounded by
+  * construction, with zero recall loss. A row carrying several keys meets a
+  * partner once per shared key: the operators emit each pair once, either
+  * from its first shared key (minhash, hamming) or by a final
+  * dropDuplicates (embedding). Oversized blocks can additionally be dropped
+  * (maxBlock > 0, counted via [[Blocking.blockStats]], never silent) where
+  * the emission rule allows it; the exact-result operators default to
+  * maxBlock = 0.
   */
 object Dedup {
 
@@ -75,7 +81,12 @@ object Dedup {
     * (A pair co-occurring only through a cross-band 64-bit hash collision —
     * different band positions hashing to one key — is no longer emitted;
     * such pairs were never part of the same-band LSH recall guarantee and
-    * arise with probability ~b²/2⁶⁴ per pair.) */
+    * arise with probability ~b²/2⁶⁴ per pair.)
+    *
+    * maxBlock must be 0: first-collision emission assumes every band's block
+    * survives. Dropping the first shared band's block would leave the pair
+    * only in later bands, whose rows the rule discards — a silent recall
+    * loss — so a positive maxBlock is refused. */
   def minhashCandidates(df0: DataFrame, idCol: String, textCol: String,
                         bands: Int = 32, rows: Int = 4, seed: Long = 42L,
                         cap: Int = 256, maxBlock: Int = 0): DataFrame =
@@ -94,6 +105,8 @@ object Dedup {
       df0: DataFrame, idCol: String, textCol: String,
       bands: Int, rows: Int, seed: Long, cap: Int, maxBlock: Int,
       sizeRatioTau: Double): DataFrame = {
+    require(maxBlock == 0, "first-collision emission needs maxBlock = 0: a dropped " +
+      s"first band would lose its pairs silently (got maxBlock = $maxBlock)")
     val df = spread(df0)
     val prune = sizeRatioTau > 0.0
     val gsz = size(tokenNgrams(col(textCol), 1))
@@ -173,8 +186,8 @@ object Dedup {
   }
 
   /** Near-duplicate pairs by token n-gram Jaccard ≥ tau, blocked by
-    * `blockCols` (never all-pairs: the self-join is block-local AND salted —
-    * an `(en, web)`-sized hot block is triangle-split across tasks). The
+    * `blockCols` (never all-pairs: pairing is block-local AND salted —
+    * an `(en, web)`-sized hot block is salt-split across tasks). The
     * size-ratio prefilter (J ≥ τ ⇒ |A|/|B| ∈ [τ, 1/τ]) prunes pairs before
     * the array intersect without changing the result. */
   def ngramJaccardPairs(df0: DataFrame, idCol: String, textCol: String,
@@ -215,11 +228,16 @@ object Dedup {
     * collapse them. The chunk index rides the grid as payload, both sides'
     * chunk values are recomputed from fp₁ xor fp₂ in-join, and the pair is
     * kept only where its chunk is the FIRST agreeing one — same pair set,
-    * exactly one emission, no pair-dedup exchange at all. */
+    * exactly one emission, no pair-dedup exchange at all. Like
+    * [[minhashCandidates]] it therefore refuses maxBlock > 0: a dropped
+    * first-agreeing chunk block would lose the pair silently and break the
+    * pigeonhole exactness. */
   def hammingNearDup(fps: DataFrame, bits: Int, chunks: Int, maxHamming: Int,
                      cap: Int = 256, maxBlock: Int = 0): DataFrame = {
     require(maxHamming <= chunks - 1,
       s"$chunks-chunk banding guarantees recall only for hamming <= ${chunks - 1}")
+    require(maxBlock == 0, "first-collision emission needs maxBlock = 0: a dropped " +
+      s"first chunk would lose its pairs silently (got maxBlock = $maxBlock)")
     val width = bits / chunks
     val mask = (1L << width) - 1
     val entries = fps.select(col("id"), col("fp"),
@@ -296,7 +314,7 @@ object Dedup {
     * bucketed shuffle instead of an all-pairs cross join), exact-cosine
     * verified. `nBits = 0` degrades to brute force (testing / tiny inputs).
     *
-    * The bucket self-join routes through [[Blocking.saltedSelfJoinPairs]]
+    * The bucket pairs come from [[Blocking.saltedSelfJoinPairs]]
     * like every other pair generator: web-scale embeddings CLUSTER (that is
     * the point of embedding them), so a dense SRP bucket is guaranteed at
     * 10^9 rows and a plain `bucket === bucket` join would hand one task
@@ -345,7 +363,7 @@ object Dedup {
 
   /** The (block_key = SRP bucket, id) entry table behind [[embeddingNearDup]]
     * — exposed so the planted-dense-bucket bound test can assert the per-task
-    * row bound the triangle salting guarantees. */
+    * row bound the salt grid guarantees. */
   private[graft] def embeddingEntries(df: DataFrame, idCol: String, vecCol: String,
                                       nBits: Int, seed: Long): DataFrame = {
     val bucket =

@@ -41,6 +41,39 @@ class BlockingSpec extends SparkSpec {
     assert(pids.size >= 4, s"hot block pairs landed in only $pids")
   }
 
+  /** Brute-force reference for the self-join pair generator: every block of
+    * 2..maxBlock rows (all of them when maxBlock = 0) contributes each of its
+    * unordered pairs exactly once, canonical (id1 < id2), with every payload
+    * column following its own row. Block sizes straddle the cap boundaries
+    * where the small-block path and the salt grid hand over. */
+  test("salted self-join ≡ O(n²) reference: random block sizes, maxBlock, payloads follow their row") {
+    val cap = 8
+    val boundary = Seq(1, cap - 1, cap, cap + 1, 3 * cap + 1)
+    for (seed <- Seq(1L, 2L, 3L); maxBlock <- Seq(0, 2 * cap)) {
+      val rnd = new scala.util.Random(seed)
+      val sizes = rnd.shuffle(boundary ++ Seq.fill(6)(1 + rnd.nextInt(4 * cap)))
+      // ids drawn from a shared pool, distinct within a block: the same id
+      // meets different partners (and different payloads) in different blocks
+      val pool = (0L until 200L).toVector
+      val rows = sizes.zipWithIndex.flatMap { case (n, b) =>
+        rnd.shuffle(pool).take(n).map(id => (b.toLong, id, s"b$b:$id", b * 1000L + id))
+      }
+      val entries = rows.toDF("block_key", "id", "p", "q")
+      val got = Blocking.saltedSelfJoinPairs(entries, cap, maxBlock, payload = Seq("p", "q"))
+        .select("id1", "id2", "p_1", "p_2", "q_1", "q_2")
+        .as[(Long, Long, String, String, Long, Long)].collect()
+        .groupBy(identity).map { case (k, v) => k -> v.length }
+      val expected = rows.groupBy(_._1).values
+        .filter(m => m.size > 1 && (maxBlock == 0 || m.size <= maxBlock))
+        .flatMap { m =>
+          for (a <- m; b <- m if a._2 < b._2) yield (a._2, b._2, a._3, b._3, a._4, b._4)
+        }.toSeq.groupBy(identity).map { case (k, v) => k -> v.length }
+      assert(got == expected,
+        s"seed=$seed maxBlock=$maxBlock sizes=$sizes: ${(got.toSet diff expected.toSet).take(5)} " +
+          s"extra, ${(expected.toSet diff got.toSet).take(5)} missing")
+    }
+  }
+
   test("small blocks (n <= cap) take the k=1 fast path") {
     val blocks = Seq(("A", 1L), ("A", 2L), ("A", 3L)).toDF("block_key", "id")
     val got = Blocking.candidatePairs(blocks, Blocking.Config(cap = 64))
@@ -115,26 +148,38 @@ class BlockingSpec extends SparkSpec {
     assert(Blocking.candidatePairs(entries(Seq(1, 2, 3, 4, 5, 6)), cfg).count() == 0)
   }
 
+  // The two cache-lifetime tests below pin the salted CROSS join, the pair
+  // join that still persists its entries (per side) for its in-join
+  // consumers. The self-join persists nothing: its entries shuffle once and
+  // every reader shares that exchange.
   test("salted-join entries cache auto-releases after the first action") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
+    def leaked = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
     val entries = spark.range(2000).select(pmod($"id", lit(7)).as("block_key"), $"id")
-    // persistEntries = true (the default): the entries frame is cached for
+    val other = spark.range(2000).select(pmod($"id", lit(7)).as("block_key"), ($"id" + 5000).as("id"))
+    // persistLeft/persistRight = true (the defaults): each side is cached for
     // the duration of ONE materialization, then the one-shot listener drops
     // it — repeated operator calls must NOT accumulate pinned block storage
-    Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0).count()
+    Blocking.saltedCrossJoinPairs(entries, other, cap = 64, maxBlock = 0).count()
     val deadline = System.currentTimeMillis + 15000
-    def leaked = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
     while (leaked > 0 && System.currentTimeMillis < deadline) Thread.sleep(100)
     assert(leaked == 0, s"$leaked cached RDD(s) still pinned after the action")
+    // the self-join never persists at all: nothing pinned while the frame
+    // exists, nothing left behind after its action
+    val self = Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0)
+    assert(leaked == 0, "saltedSelfJoinPairs persisted its input at plan time")
+    self.count()
+    assert(leaked == 0, s"saltedSelfJoinPairs left $leaked persisted RDD(s) behind")
   }
 
   test("entries cache survives unrelated actions; only the consuming plan releases it") {
     val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
     def extra = (spark.sparkContext.getPersistentRDDs.keySet -- beforeIds).size
     val entries = spark.range(1500).select(pmod($"id", lit(3)).as("block_key"), $"id")
-    val pairs = Blocking.saltedSelfJoinPairs(entries, cap = 64, maxBlock = 0)
+    val other = spark.range(1500).select(pmod($"id", lit(3)).as("block_key"), ($"id" + 5000).as("id"))
+    val pairs = Blocking.saltedCrossJoinPairs(entries, other, cap = 64, maxBlock = 0)
     // an action over the ENTRIES subtree alone (the blockStats shape) must
     // NOT release the cache — it predates the multi-consumer pairs join the
     // cache exists for (round-3 ADVICE: subtree matching released here)

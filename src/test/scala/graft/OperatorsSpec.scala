@@ -33,6 +33,47 @@ class OperatorsSpec extends SparkSpec {
     assert(found >= (nTruth * 0.99).toLong, s"recall ${found.toDouble / nTruth}")
   }
 
+  /** A pair must never vanish silently: either it is emitted, or the call
+    * refuses its arguments. */
+  private def emittedOrRefused(pair: (Long, Long))(run: => Array[(Long, Long)]): Unit =
+    scala.util.Try(run) match {
+      case scala.util.Success(got) => assert(got.contains(pair), s"pair $pair lost silently")
+      case scala.util.Failure(_: IllegalArgumentException) => ()
+      case scala.util.Failure(e) => throw e
+    }
+
+  test("first-collision emission with maxBlock > 0: no pair is lost silently") {
+    // docs 1 and 2 are identical, so first_equal_index names band 0 for
+    // them. Ten more docs share that band-0 key (and no band-1 key), so
+    // maxBlock = 5 drops the band-0 block: the pair then meets only in its
+    // band-1 block, where first-collision emission discards it
+    val base = "alpha beta gamma delta epsilon"
+    val (bands, rows, seed) = (2, 1, 42L)
+    def sig(texts: Seq[String]) = texts.toDF("t")
+      .select(graft.functions.GraftFunctions.minhash_token_bands(lower($"t"), bands, rows, seed))
+      .as[Seq[Long]].collect().toSeq
+    val b0 = sig(Seq(base)).head
+    val candidates = (0 until 300).map(i => s"$base extra$i")
+    val crowd = candidates.zip(sig(candidates))
+      .collect { case (t, s) if s(0) == b0(0) && s(1) != b0(1) => t }.take(10)
+    assert(crowd.size == 10, "not enough band-0-only neighbours in the search space")
+    val docs = ((1L, base) +: (2L, base) +: crowd.zipWithIndex.map { case (t, i) => (100L + i, t) })
+      .toDF("id", "text")
+    emittedOrRefused((1L, 2L)) {
+      Dedup.minhashCandidates(docs, "id", "text", bands, rows, seed, maxBlock = 5)
+        .as[(Long, Long)].collect()
+    }
+    // the hamming operator's first agreeing chunk: same shape, chunk 0
+    // crowded past maxBlock, the pair surviving only in chunk 1
+    val fp = 0x0001000200030004L
+    val fps = ((1L, fp) +: (2L, fp) +: (100 until 110).map(i => (i.toLong, (i.toLong << 16) | 4L)))
+      .toDF("id", "fp")
+    emittedOrRefused((1L, 2L)) {
+      Dedup.hammingNearDup(fps, bits = 64, chunks = 4, maxHamming = 3, maxBlock = 5)
+        .select("id1", "id2").as[(Long, Long)].collect()
+    }
+  }
+
   test("simhash near-dup: hamming-banded candidates catch near-identical docs") {
     // simhash hamming ≤ 3 needs long documents (bit margins grow ~√n_tokens;
     // a 1-token change in a 12-token doc legitimately flips >3 bits)

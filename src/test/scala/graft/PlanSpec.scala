@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec,
+  ShuffleExchangeExec}
 
 /** Physical-plan assertions: the optimizations we rely on at 100 TB must be
   * visible in the executed plan, not assumed — filter/column pushdown into
   * the parquet scan, broadcast joins for dims, and whole-stage codegen over
   * the custom similarity expressions. */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -172,6 +177,66 @@ class PlanSpec extends SparkSpec {
     val plan = formatted(read)
     val pf = plan.linesIterator.find(_.contains("PartitionFilters"))
     assert(pf.exists(_.contains("warc_day")), plan.take(2000))
+  }
+
+  /** Shuffle exchanges that actually ran in a finished adaptive plan
+    * (reused stages excluded), and the reused ones. */
+  private def finalExchanges(df: DataFrame): (Seq[ShuffleExchangeExec], Seq[ReusedExchangeExec]) = {
+    df.collect() // finalize THIS dataset's adaptive plan
+    val plan = df.queryExecution.executedPlan
+    (collect(plan) { case e: ShuffleExchangeExec => e },
+      collect(plan) { case r: ReusedExchangeExec => r })
+  }
+
+  private def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+    case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+    case _ => Nil
+  }
+
+  test("ER pairs on small blocks: one entries shuffle plus the pair dedup, no salt grid, no cache") {
+    import org.apache.spark.sql.functions.{lit, pmod}
+    import spark.implicits._
+    // 1000 blocks of 3 rows: every block is under the cap (64)
+    val blocks = spark.range(3000).select(pmod($"id", lit(1000L)).as("block_key"), $"id")
+    val pairs = graft.blocking.Blocking.candidatePairs(blocks, graft.blocking.Blocking.Config())
+    val (ran, _) = finalExchanges(pairs)
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(ran.map(keys).toSet == Set(Seq("block_key"), Seq("id1", "id2")), plan)
+    assert(ran.size == 2, plan)
+    assert(!plan.contains("InMemoryRelation") && !plan.contains("InMemoryTableScan"), plan)
+    assert(!ran.exists(keys(_).contains("salt")), plan)
+    assert(pairs.count() == 3000L)
+  }
+
+  test("hot blocks read the one entries exchange again as a ReusedExchange") {
+    import org.apache.spark.sql.functions.{lit, pmod, when}
+    import spark.implicits._
+    // 300 small blocks of 3 rows plus one hot block of 300 (cap 64 → k = 5)
+    val blocks = spark.range(1200).select(
+      when($"id" < 900, pmod($"id", lit(300L))).otherwise(lit(-1L)).as("block_key"), $"id")
+    val pairs = graft.blocking.Blocking.candidatePairs(blocks, graft.blocking.Blocking.Config())
+    val (ran, reused) = finalExchanges(pairs)
+    val plan = pairs.queryExecution.executedPlan.toString
+    // exchanges moving entry rows (an id column) by block_key alone: the
+    // one raw shuffle, read again by the hot branch through reuse
+    def entryShuffle(e: ShuffleExchangeExec) =
+      keys(e) == Seq("block_key") && e.output.exists(_.name == "id")
+    val reusedShuffles = reused.map(_.child).collect { case e: ShuffleExchangeExec => e }
+    assert(ran.count(entryShuffle) == 1, plan)
+    assert(reusedShuffles.exists(entryShuffle), plan)
+    // the salt grid is two numbered exchanges (the roles); the same-salt
+    // groups ride in the right role's and read it again
+    assert(ran.count(_.shuffleOrigin == REPARTITION_BY_NUM) == 2, plan)
+    assert(reusedShuffles.exists(_.shuffleOrigin == REPARTITION_BY_NUM), plan)
+    assert(pairs.count() == 300L * 3 + 300L * 299 / 2)
+  }
+
+  test("q22: minhash candidates never shuffle on band_idx") {
+    // the band_idx_1 = band_idx_2 filter must not reach a pair join as an
+    // equi-key: that re-partitioned the grid on (block_key, salt, band_idx)
+    // at shuffle parallelism instead of the numbered salt exchange
+    val plan = formatted(Queries.q22_minhash_dedup(spark, dir))
+    assert("""hashpartitioning\([^\n)]*band_idx""".r.findFirstIn(plan).isEmpty, plan)
   }
 
   test("blocking: minhash bands are one custom expression, not an expr chain") {
